@@ -25,6 +25,21 @@ def test_authors_full_world_pr(spark, world, dims):
     assert p == 1.0 and r == 1.0, (extra, missing)
 
 
+def test_authors_full_world_without_dedupe(spark, world, dims):
+    """dedupe=False (the raw emission, deduplicated later by merge) must
+    carry exactly the golden triple set once duplicates are dropped."""
+    person_qids = spark.createDataFrame(
+        [(p["qid"],) for p in world.persons], "qid string"
+    )
+    raw = authors_stage(spark, person_qids, dims["wd_statements"],
+                        dims["wd_labels"], dedupe=False)
+    engine = triples_to_python_set(raw)  # the distinct set
+    golden = oracle.authors_triples(world)
+    assert engine == golden, (sorted(engine - golden)[:5],
+                              sorted(golden - engine)[:5])
+    assert raw.count() >= len(golden)
+
+
 def test_authors_subset_qids(spark, world, dims):
     subset = {p["qid"] for p in world.persons[:7]}
     person_qids = spark.createDataFrame([(q,) for q in sorted(subset)], "qid string")

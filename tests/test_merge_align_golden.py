@@ -48,9 +48,16 @@ def test_merge_golden(spark, world, dims, stage_outputs, golden_parts):
         p, r, sorted(engine - golden)[:8], sorted(golden - engine)[:8])
 
 
-def test_align_golden(spark, world, dims, stage_outputs, golden_parts):
+@pytest.mark.parametrize("assume_distinct", [True, False],
+                         ids=["delta-dedup", "full-dedup"])
+def test_align_golden(spark, world, dims, stage_outputs, golden_parts,
+                      assume_distinct):
+    """Both assembly paths: the delta dedup the pipeline uses, and the
+    full-graph dedup + whole-output CURIE normalization that ``cli
+    map-align`` uses for arbitrary input graphs."""
     merged = merge_stage(spark, list(stage_outputs)).localCheckpoint(eager=True)
-    aligned = align_stage(spark, merged, dims["wd_external_ids"])
+    aligned = align_stage(spark, merged, dims["wd_external_ids"],
+                          assume_distinct=assume_distinct)
     engine = triples_to_python_set(aligned)
     golden_merged = oracle.merge_triples(*golden_parts)
     golden = oracle_align.align_triples(golden_merged, world.external_ids)

@@ -1,17 +1,20 @@
-"""SQL-compiled stage builds must be triple-set identical to the classic
-DataFrame builds (plans/sql_stages.py acceptance gate, round 6).
-
-The SQL path is the default (SPARK_GRAFT_SQL_STAGES=1) — the golden-parity
-tests already pin it against the reference outputs; this module pins the
-*internal* equivalence of the two builds so either can be used as the
-other's oracle, and covers the non-default flag combinations the pipeline
-doesn't exercise (include_header=False, dedupe=False)."""
+"""Shape and guard checks for the SQL-compiled stages (plans/sql_stages.py
+helpers and the stage modules that use them). The golden-parity tests pin
+the emitted triple sets; this module pins the plan shape of the rule
+fan-out and the cleanup of the relations stage's plan pool."""
 
 from __future__ import annotations
+
+import threading
 
 import pytest
 
 from wikidata_to_cidoc_crm_spark.model import triples_to_python_set
+
+
+def _plan(df, mode: str = "simple") -> str:
+    jvm = df.sparkSession._jvm
+    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
 def _qids(spark, world, key):
@@ -19,78 +22,43 @@ def _qids(spark, world, key):
     return spark.createDataFrame([(r["qid"],) for r in rows], "qid string")
 
 
-def _both(monkeypatch, build):
-    monkeypatch.setenv("SPARK_GRAFT_SQL_STAGES", "1")
-    via_sql = triples_to_python_set(build())
-    monkeypatch.setenv("SPARK_GRAFT_SQL_STAGES", "0")
-    via_df = triples_to_python_set(build())
-    return via_sql, via_df
+def test_emit_inline_sql_is_shuffle_free(spark, dims):
+    """The rule fan-out alone is a pure Project + Generate inside
+    whole-stage codegen: it shuffles nothing (SURVEY §2.2 P13)."""
+    from pyspark.sql import functions as F
+
+    from wikidata_to_cidoc_crm_spark.functions.uris import mint
+    from wikidata_to_cidoc_crm_spark.model import Rule
+    from wikidata_to_cidoc_crm_spark.plans.sql_stages import _emit_inline_sql
+
+    emit = _emit_inline_sql(spark, [
+        Rule(mint("person", "qid"), "p:x", F.col("label"), obj_is_iri=False),
+        Rule(mint("person", "qid"), "p:y", F.col("lang"), obj_is_iri=False),
+    ], "test:fanout")
+    out = spark.sql(f"SELECT {emit} FROM {{w}}", w=dims["wd_labels"])
+    plan = _plan(out)
+    assert "Exchange" not in plan  # pure Project+Generate, no shuffle
+    assert "Generate inline" in plan
+    # '*(n)' prefixes mark whole-stage-codegen spans in simpleString
+    assert "*(" in plan
+    assert out.count() == 2 * dims["wd_labels"].count()
 
 
-def test_authors_sql_equals_dataframe(spark, dims, world, monkeypatch):
-    from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-
-    pq = _qids(spark, world, "persons")
-    a, b = _both(monkeypatch, lambda: authors_stage(
-        spark, pq, dims["wd_statements"], dims["wd_labels"]))
-    assert a == b and len(a) > 100
-
-
-def test_works_sql_equals_dataframe(spark, dims, world, monkeypatch):
-    from wikidata_to_cidoc_crm_spark.plans.works import works_stage
-
-    wq = _qids(spark, world, "works")
-    a, b = _both(monkeypatch, lambda: works_stage(
-        spark, wq, dims["wd_statements"], dims["wd_labels"]))
-    assert a == b and len(a) > 100
-
-
-def test_relations_sql_equals_dataframe(spark, dims, world, monkeypatch):
-    from wikidata_to_cidoc_crm_spark.plans.relations import relations_stage
-
-    wq = _qids(spark, world, "works")
-    a, b = _both(monkeypatch, lambda: relations_stage(
-        spark, wq, dims["wd_statements"], dims["wd_labels"],
-        dims["wd_subclass_closure"], dims["wd_property_closure"]))
-    assert a == b and len(a) > 100
-
-
-@pytest.mark.parametrize("include_header,dedupe", [(False, True), (True, False)])
-def test_flag_variants_match(spark, dims, world, monkeypatch,
-                             include_header, dedupe):
-    """Non-default flags: header exclusion and raw (pre-dedup) emission.
-    For dedupe=False the MULTISET can differ between builds only by
-    duplicate counts that the downstream merge dedups away, so compare the
-    distinct set (the contract both builds must honor)."""
-    from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-
-    pq = _qids(spark, world, "persons")
-    a, b = _both(monkeypatch, lambda: authors_stage(
-        spark, pq, dims["wd_statements"], dims["wd_labels"],
-        include_header=include_header, dedupe=dedupe))
-    assert a == b and len(a) > 100
-
-
-def test_emission_sql_is_fanout_generate(spark, dims, world, monkeypatch):
+def test_emission_sql_is_fanout_generate(spark, dims, world):
     """The SQL emission keeps the P13 shape: one Generate (inline) per
     source, no shuffle introduced by the fan-out itself."""
-    monkeypatch.setenv("SPARK_GRAFT_SQL_STAGES", "1")
     from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
 
     pq = _qids(spark, world, "persons")
     df = authors_stage(spark, pq, dims["wd_statements"], dims["wd_labels"],
                        dedupe=False)
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
-    assert "Generate inline" in plan
+    assert "Generate inline" in _plan(df)
 
 
 def test_triples_to_python_set_guard_raises(spark):
     """model.triples_to_python_set must refuse production-scale collects
     (round-4/5 advice item: row-count gate like linking.py's)."""
     from pyspark.sql import functions as F
-
-    from wikidata_to_cidoc_crm_spark.model import triples_to_python_set
 
     big = spark.range(10).select(
         F.col("id").cast("string").alias("subj"), F.lit("p").alias("pred"),
@@ -102,16 +70,28 @@ def test_triples_to_python_set_guard_raises(spark):
     assert len(triples_to_python_set(big, max_rows=100)) == 10
 
 
-def test_merge_sql_equals_dataframe(spark, dims, world, monkeypatch):
-    from wikidata_to_cidoc_crm_spark.plans.authors import authors_stage
-    from wikidata_to_cidoc_crm_spark.plans.merge import merge_stage
-    from wikidata_to_cidoc_crm_spark.plans.works import works_stage
+def test_relations_plan_pool_joined_when_a_block_build_fails(
+        spark, dims, world, monkeypatch):
+    """A block build that raises on the relations stage's plan pool must
+    surface from relations_stage and leave no ``relsql-plan`` thread
+    alive — an orphaned build would keep planning checkpoints inside
+    lazy_checkpoint's session-wide AQE-off window."""
+    from wikidata_to_cidoc_crm_spark.plans import relations as relmod
 
-    pq = _qids(spark, world, "persons")
+    real = relmod.lazy_checkpoint
+
+    def failing_on_pool(df):
+        if threading.current_thread().name.startswith("relsql-plan"):
+            raise RuntimeError("block build failed")
+        return real(df)
+
+    monkeypatch.setattr(relmod, "lazy_checkpoint", failing_on_pool)
     wq = _qids(spark, world, "works")
-    a = authors_stage(spark, pq, dims["wd_statements"], dims["wd_labels"]) \
-        .localCheckpoint(eager=True)
-    w = works_stage(spark, wq, dims["wd_statements"], dims["wd_labels"]) \
-        .localCheckpoint(eager=True)
-    s1, s2 = _both(monkeypatch, lambda: merge_stage(spark, [a, w]))
-    assert s1 == s2 and len(s1) > 100
+    with pytest.raises(RuntimeError, match="block build failed"):
+        relmod.relations_stage(
+            spark, wq, dims["wd_statements"], dims["wd_labels"],
+            dims["wd_subclass_closure"], dims["wd_property_closure"])
+    alive = [t.name for t in threading.enumerate()
+             if t.name.startswith("relsql-plan")]
+    assert alive == []
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

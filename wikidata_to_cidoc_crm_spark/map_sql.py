@@ -222,7 +222,7 @@ wide AS MATERIALIZED (
          coalesce(le.label, 'Unknown (' || p.qid || ')') AS label,
          piv.gender_qid, lg.label AS gender_label,
          -- DuckDB split_part(NULL) is '' not NULL — guard to match
-         -- Spark's NULL-propagating substring_index (functions/dates.py)
+         -- Spark's NULL-propagating substring_index (plans/authors.py)
          CASE WHEN piv.p569 IS NOT NULL
               THEN split_part(piv.p569, 'T', 1) END AS birth_date,
          CASE WHEN piv.p570 IS NOT NULL

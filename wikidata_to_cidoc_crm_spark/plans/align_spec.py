@@ -47,7 +47,7 @@ L = LRMOO
 I = INTRO  # noqa: E741
 
 
-# 6-tuple layout (s, p, o, obj_is_iri, lang, dtype) — model.const_triples format
+# 6-tuple layout (s, p, o, obj_is_iri, lang, dtype) — plans/constants format
 def _t(s, p, o):
     return (s, p, o, True, None, None)
 

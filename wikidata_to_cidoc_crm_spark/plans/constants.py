@@ -1,13 +1,13 @@
 """Constant triple blocks (ontology headers + alignment axioms).
 
 Mirrors the reference's ``create_graph``/``build_graph`` static emissions:
-authors.py:148-179, works.py:159-231, relations.py:138-166. These are
-O(1)-sized and unioned into each stage's output.
+authors.py:148-179, works.py:159-231, relations.py:138-166 and 879-902.
+These are O(1)-sized tuple lists — ``(s, p, o[, is_iri[, lang[, dtype]]])``,
+IRI objects by default — that the stages union into their output as a
+``VALUES`` block (``sql_stages._const_values_sql``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 from ..model import (
     CRM,
@@ -18,9 +18,11 @@ from ..model import (
     LRMOO,
     LRMOO_ONTO,
     OWL,
+    OWL_SAMEAS,
     RDF_TYPE,
+    RDFS_LABEL,
     SAPPHO,
-    const_triples,
+    WD,
 )
 
 OWL_ONTOLOGY = OWL + "Ontology"
@@ -59,14 +61,14 @@ def _equivalence_block(classes, props, ecrm_ns=ECRM, crm_ns=CRM):
     return triples
 
 
-def authors_header(spark: SparkSession) -> DataFrame:
+def authors_header_triples() -> list[tuple]:
     onto = SAPPHO + "ontology/authors"
     triples = [
         (onto, RDF_TYPE, OWL_ONTOLOGY),
         (onto, OWL_IMPORTS, ECRM),
     ]
     triples += _equivalence_block(AUTHOR_CLASSES, AUTHOR_PROPS)
-    return const_triples(spark, triples)
+    return triples
 
 
 # works.py:160-233 — ontology node, eCRM↔CRM class/property equivalences,
@@ -111,10 +113,6 @@ WORK_LRMOO_PROPS = [
 ]
 
 
-def works_header(spark: SparkSession) -> DataFrame:
-    return const_triples(spark, works_header_triples())
-
-
 def works_header_triples() -> list[tuple]:
     onto = SAPPHO + "ontology/works"
     triples = [
@@ -142,13 +140,35 @@ def works_header_triples() -> list[tuple]:
     return triples
 
 
-def relations_header(spark: SparkSession) -> DataFrame:
-    """relations.py:154-166 — ontology node importing eCRM/LRMoo/INTRO."""
+def relations_header_triples() -> list[tuple]:
+    """relations.py:147-166 — ontology node importing eCRM/LRMoo/INTRO,
+    then the Wikidata ID-Type block."""
     onto = SAPPHO + "ontology/relations"
-    triples = [
+    id_type = SAPPHO + "id_type/wikidata"
+    return [
         (onto, RDF_TYPE, OWL_ONTOLOGY),
         (onto, OWL_IMPORTS, ECRM),
         (onto, OWL_IMPORTS, LRMOO_ONTO),
         (onto, OWL_IMPORTS, INTRO),
+        (id_type, RDF_TYPE, ECRM + "E55_Type"),
+        (id_type, RDFS_LABEL, "Wikidata ID", False, "en"),
+        (id_type, OWL_SAMEAS, WD + "Q43649390"),
     ]
-    return const_triples(spark, triples)
+
+
+def relations_alignment_triples() -> list[tuple]:
+    """relations.py:879-902 — post-processing alignment block, sorted."""
+    triples = [(ECRM + cls, OWL_EQ_CLASS, CRM + cls)
+               for cls in ["E21_Person", "E42_Identifier", "E53_Place", "E55_Type"]]
+    for d, i in [("P1_is_identified_by", "P1i_identifies"),
+                 ("P2_has_type", "P2i_is_type_of"),
+                 ("P67_refers_to", "P67i_is_referred_to_by")]:
+        triples += [
+            (ECRM + d, OWL_EQ_PROP, CRM + d),
+            (ECRM + i, OWL_EQ_PROP, CRM + i),
+            (ECRM + d, OWL_INVERSE, ECRM + i),
+            (ECRM + i, OWL_INVERSE, ECRM + d),
+        ]
+    triples += [(LRMOO + "F2_Expression", OWL_EQ_CLASS, FRBROO + "F2_Expression"),
+                (LRMOO + "F2_Expression", OWL_EQ_CLASS, EFRBROO + "F2_Expression")]
+    return sorted(triples)

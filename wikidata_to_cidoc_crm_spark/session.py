@@ -15,7 +15,25 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cores() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEM``, else a quarter of the host's memory clamped
+    to 1-4 GiB — a local-mode driver holds the executors too, and the rest
+    of the host stays free for Python workers and the page cache."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(4, total // (4 << 30)))}g"
 
 
 def get_spark(
@@ -27,7 +45,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+    ``cores=None`` → ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+    process may use); driver memory is ``$SPARK_DRIVER_MEM`` (default: a
+    quarter of the host's memory, 1-4 GiB).
     ``shuffle_partitions`` defaults to the core count — at cluster scale this
     is instead sized as ~2-3x total executor cores (and AQE coalesces).
     ``master`` overrides the local-mode default — used by the scaling bench
@@ -51,7 +71,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # broadcast builds sit downstream of lazily-checkpointed subtrees,
